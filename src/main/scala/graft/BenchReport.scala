@@ -5,24 +5,25 @@ package graft
   * The driver captures only the last ~2,000 characters of the bench
   * process's output and parses the last line as JSON. From r09 to r17 the
   * "compact" line silently outgrew that window (top-20 wall + top-20 CPU +
-  * adjudication + vs_floor + loadavg pushed it past 2,000 chars), so every
-  * round's PERF comparison came back empty (`parsed: null` in
-  * BENCH_r09..r17.json) — the r17 verdict's #1 ask is restoring this
-  * contract. The construction therefore lives here as a pure function with
-  * HARD caps on every variable-length field, and BenchReportSpec asserts a
-  * worst-case 206-key line stays far under the capture window. Everything
-  * dropped from the line (full per-query maps, loadavg, adjudication
-  * medians, raw noisy pass times) still lands in BENCH_FULL.json.
+  * diagnostic maps + loadavg pushed it past 2,000 chars), so every round's
+  * PERF comparison came back empty (`parsed: null` in BENCH_r09..r17.json).
+  * The construction therefore lives here as a pure function with HARD caps
+  * on every variable-length field, and BenchReportSpec asserts a worst-case
+  * 206-key line stays far under the capture window. Everything dropped from
+  * the line (full per-query maps, loadavg, raw per-pass times, the full sf
+  * path) still lands in BENCH_FULL.json.
   */
 object BenchReport {
   /** Per-query entries in the printed line (wall and CPU maps each). */
   val LineTopN = 10
   /** Caps on the diagnostic lists; totals are carried as n_* counts so a
     * capped list never hides its true size. */
-  val VsFloorCap = 4
   val FailedCap = 4
   val ExcludedCap = 3
   val SlowCap = 2
+  /** `sf` is printed as its directory name only, cut to this length: a
+    * scale-probe corpus can live under an arbitrarily long path. */
+  val SfCap = 64
   /** Spec'd ceiling: the driver's capture is 2,000 chars; the line plus its
     * newline must always fit with margin. */
   val MaxLineChars = 1800
@@ -35,31 +36,24 @@ object BenchReport {
 
   /** The one line the driver parses. `queriesBySlowest` is the full
     * (key → wall-median) seq sorted slowest-first; `cpuByKey` the CPU
-    * medians; `vsFloor` the POST-adjudication flags sorted by ratio desc.
-    * All caps applied here so no caller can regrow the line. */
+    * medians. All caps applied here so no caller can regrow the line. */
   def finalLine(
       total: Double, nQueries: Int, reps: Int, mode: String,
-      coldTotal: Double, cpuTotal: Double, quietWaitSec: Double,
+      coldTotal: Double, cpuTotal: Double,
       stealPctJson: String, contended: Boolean,
-      nNoisy: Int, nRepassed: Int, nAdjudicated: Int, floorCmp: Boolean,
-      vsFloor: Seq[(String, Double)],
       failed: Seq[String], excluded: Seq[String], slowOver60s: Seq[String],
       queriesBySlowest: Seq[(String, Double)],
       cpuByKey: Map[String, Double], sf: String): String = {
     val top = queriesBySlowest.take(LineTopN)
     val topCpu = top.map { case (k, _) => k -> cpuByKey.getOrElse(k, 0.0) }
-    val vsFloorJson = vsFloor.take(VsFloorCap)
-      .map { case (k, r) => s""""$k":${f"$r%.2f"}""" }.mkString("{", ",", "}")
+    val sfName = sf.split('/').filter(_.nonEmpty).lastOption.getOrElse(sf).take(SfCap)
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":$nQueries,""" +
       s""""reps":$reps,"stat":"median_across_passes","mode":"$mode",""" +
       s""""cold_total":${fmt(coldTotal)},"cpu_total":${fmt(cpuTotal)},""" +
-      s""""quiet_wait_s":${fmt(quietWaitSec)},"steal_pct_cpu":$stealPctJson,""" +
-      s""""contended":$contended,"n_noisy":$nNoisy,"n_repassed":$nRepassed,""" +
-      s""""n_adjudicated":$nAdjudicated,"floor_cmp":$floorCmp,""" +
-      s""""n_over_floor":${vsFloor.size},"vs_floor":$vsFloorJson,""" +
+      s""""steal_pct_cpu":$stealPctJson,"contended":$contended,""" +
       s""""n_failed":${failed.size},"failed":${arr(failed.sorted.take(FailedCap))},""" +
       s""""n_excluded":${excluded.size},"excluded":${arr(excluded.sorted.take(ExcludedCap))},""" +
       s""""slow_over_60s":${arr(slowOver60s.take(SlowCap))},""" +
-      s""""queries":${kv(top)},"queries_cpu":${kv(topCpu)},"sf":"$sf"}"""
+      s""""queries":${kv(top)},"queries_cpu":${kv(topCpu)},"sf":"$sfName"}"""
   }
 }

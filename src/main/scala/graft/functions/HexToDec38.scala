@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DecimalType}
@@ -69,8 +70,12 @@ object HexToDec38 {
   }
 
   /** Register `hex_to_dec38` in the session's function registry so SQL and
-    * `expr("hex_to_dec38(...)")` resolve it. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hex_to_dec38", build, "built-in")
+    * `expr("hex_to_dec38(...)")` resolve it. Idempotent: a repeat call is a
+    * no-op, because re-registering logs a "replaced a previously registered
+    * function" warning on every query that calls this. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("hex_to_dec38")))
+      registry.createOrReplaceTempFunction("hex_to_dec38", build, "built-in")
+  }
 }

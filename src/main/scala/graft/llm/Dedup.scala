@@ -901,7 +901,7 @@ object Dedup {
     * this key at 10× sf0.1. */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
     val sim = simhashFingerprints(spark, dir)
-    // Candidate scheme by corpus size (probe #21 adjudication, thresholds
+    // Candidate scheme by corpus size (probe #21 finding, thresholds
     // re-measured r16 — see [[SimhashMankuSwitchDocs]]): the 4×16 layout's
     // collision mass grows to 4.6× the Manku C(6,3) mass by n = 500 k
     // (1.45 G vs 319 M measured), while below the switch both are trivial

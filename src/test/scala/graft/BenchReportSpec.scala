@@ -13,19 +13,17 @@ class BenchReportSpec extends AnyFunSuite {
   // The longest declared key name bounds per-entry width in the maps.
   private val longest = SparkEntry.queries.keys.maxBy(_.length)
 
-  private def worstCaseLine(nKeys: Int): String = {
+  private def worstCaseLine(nKeys: Int, sf: String = "/root/testdata/sf0.1"): String = {
     val keys = (0 until nKeys).map(i => f"${longest}_$i%03d")
     val slowFirst = keys.map(k => k -> 9999.999)
     BenchReport.finalLine(
       total = 999999.999, nQueries = nKeys, reps = 11, mode = "warm",
-      coldTotal = 999999.999, cpuTotal = 999999.999, quietWaitSec = 600.0,
+      coldTotal = 999999.999, cpuTotal = 999999.999,
       stealPctJson = "455.9", contended = true,
-      nNoisy = nKeys, nRepassed = nKeys, nAdjudicated = nKeys, floorCmp = true,
-      vsFloor = keys.map(k => k -> 99.99),
       failed = keys, excluded = keys, slowOver60s = keys,
       queriesBySlowest = slowFirst,
       cpuByKey = slowFirst.toMap,
-      sf = "/root/testdata/sf0.1")
+      sf = sf)
   }
 
   test("a maximally-populated 206-key line stays under the driver's tail capture") {
@@ -43,14 +41,12 @@ class BenchReportSpec extends AnyFunSuite {
     assert(node.get("metric").asText() == "total")
     assert(node.get("unit").asText() == "sec")
     assert(node.get("value").isNumber)
-    assert(node.get("sf").asText() == "/root/testdata/sf0.1")
+    assert(node.get("sf").asText() == "sf0.1") // basename; full path in BENCH_FULL.json
     assert(node.get("queries").size() == BenchReport.LineTopN)
     assert(node.get("queries_cpu").size() == BenchReport.LineTopN)
     // capped lists carry their true sizes alongside
     assert(node.get("n_failed").asInt() == 206)
     assert(node.get("failed").size() == BenchReport.FailedCap)
-    assert(node.get("n_over_floor").asInt() == 206)
-    assert(node.get("vs_floor").size() == BenchReport.VsFloorCap)
     assert(node.get("n_excluded").asInt() == 206)
     assert(node.get("contended").asBoolean())
   }
@@ -60,15 +56,25 @@ class BenchReportSpec extends AnyFunSuite {
     val slowFirst = keys.map(k => k -> 3.456).sortBy(-_._2)
     val line = BenchReport.finalLine(
       total = 79.561, nQueries = keys.size, reps = 3, mode = "warm",
-      coldTotal = 165.901, cpuTotal = 117.533, quietWaitSec = 0.0,
+      coldTotal = 165.901, cpuTotal = 117.533,
       stealPctJson = "0.5", contended = false,
-      nNoisy = 0, nRepassed = 0, nAdjudicated = 0, floorCmp = true,
-      vsFloor = Seq.empty, failed = Seq.empty, excluded = Seq.empty,
+      failed = Seq.empty, excluded = Seq.empty,
       slowOver60s = Seq.empty, queriesBySlowest = slowFirst,
       cpuByKey = slowFirst.toMap, sf = "/root/testdata/sf0.1")
     info(s"healthy line length: ${line.length} chars")
     assert(line.length <= 1400, s"healthy line is ${line.length} chars")
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     assert(node.get("n_queries").asInt() == keys.size)
+  }
+
+  test("a long SPARK_GRAFT_SF_DIR cannot push the line past the cap") {
+    // a scale-probe corpus nested deep under a scratch tree: 4,000 chars
+    val deep = "/tmp" + ("/" + "scale_probe_dir" * 4) * 66 + "/sfscale100"
+    assert(deep.length >= 4000)
+    val line = worstCaseLine(206, sf = deep)
+    info(s"long-sf line length: ${line.length} chars")
+    assert(line.length <= BenchReport.MaxLineChars)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(node.get("sf").asText() == "sfscale100")
   }
 }

@@ -2,16 +2,29 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 // scratch profiling main (test scope, not shipped): runs one declared query
 // with a stage-completion listener and prints per-stage executor CPU / run
 // time so a key's CPU total can be attributed to specific stages.
-//   graft.DevStageCpu <sfDir> <key> [reps]
+//   graft.DevStageCpu <sfDir> <key> [reps] [--metrics] [--plan <outDir>]
+// --metrics prints the executed plan tree with every operator's SQL metrics;
+// --plan writes <outDir>/<key>.txt with the explain("formatted") plan and the
+// executed AQE final plan, for committing before/after plan evidence.
+// Session confs mirror Bench's (shuffle.partitions = cpus, UTC) so the plans
+// match what the bench actually runs.
 object DevStageCpu {
   def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val key = args(1)
-    val reps = if (args.length > 2) args(2).toInt else 1
+    val planDir = args.indexOf("--plan") match {
+      case -1 => None
+      case i => Some(args(i + 1))
+    }
+    val positional = args.filterNot(a => a == "--metrics" || a == "--plan" || planDir.contains(a))
+    val dir = positional(0)
+    val key = positional(1)
+    val reps = if (positional.length > 2) positional(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -45,17 +58,25 @@ object DevStageCpu {
         println(f"stage $id%4d cpu=${cpuMs / 1000.0}%7.3f run=${runMs / 1000.0}%7.3f tasks=$nt%4d  $name")
       }
     }
+    planDir.foreach { out =>
+      val qe = lastDf.queryExecution
+      val formatted = qe.explainString(ExplainMode.fromString("formatted"))
+      // The noop write above ran under its own QueryExecution; executing
+      // this one lets AQE settle its final plan (what actually ran).
+      qe.toRdd.foreach(_ => ())
+      val txt = s"=== FORMATTED ===\n$formatted\n=== EXECUTED (AQE final) ===\n${qe.executedPlan}\n"
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+      java.nio.file.Files.write(java.nio.file.Paths.get(out, s"$key.txt"), txt.getBytes("UTF-8"))
+      println(s"wrote $out/$key.txt (${txt.length} chars)")
+    }
     if (args.contains("--metrics") || sys.env.contains("DEV_METRICS")) {
-      def walk(p: org.apache.spark.sql.execution.SparkPlan, depth: Int): Unit = {
+      def walk(p: SparkPlan, depth: Int): Unit = {
         val m = p.metrics.map { case (k, v) => s"$k=${v.value}" }.mkString(", ")
         println(("  " * depth) + p.nodeName + (if (m.nonEmpty) s"  [$m]" else ""))
         p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            walk(a.executedPlan, depth + 1)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            walk(q.plan, depth + 1)
-          case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-            walk(r.child, depth + 1)
+          case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth + 1)
+          case q: QueryStageExec => walk(q.plan, depth + 1)
+          case r: ReusedExchangeExec => walk(r.child, depth + 1)
           case _ => p.children.foreach(walk(_, depth + 1))
         }
       }
