@@ -117,10 +117,11 @@ object Bench {
     // /proc/loadavg sampled per pass boundary makes a polluted run
     // self-identifying in the JSON.
     //
-    // Warm vs cold: the memoized write-then-read operators and cached dedup
-    // intermediates make passes 2..N warm, so the median reports
-    // steady-state query cost — NOT comparable to the r1-r5 single-shot
-    // totals. The cross-round-comparable number is `cold_total` = the
+    // Warm vs cold: the staged write-then-read directories, the frames
+    // still cached from an earlier pass (Spark reuses a cached plan equal to
+    // a new call's) and JIT/codegen make passes 2..N warm, so the median
+    // reports steady-state query cost — NOT comparable to the r1-r5
+    // single-shot totals. The cross-round-comparable number is `cold_total` = the
     // pass-1 (first-touch) sum, which is exactly what a single-shot run
     // measured. SPARK_GRAFT_BENCH_COLD=1 additionally clears every memo
     // cache before each key, making every rep a true first touch (no

@@ -1,60 +1,54 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped memoization for operator intermediates that are rebuilt
-  * identically on every invocation: cached DataFrames reused within one
-  * operator (both sides of a self-join) and across repeat calls
-  * (Verify/Bench/tests), and staged on-disk index directories.
+/** Session-scoped bookkeeping for operator intermediates.
+  *
+  * [[cache]] is for a frame that ONE call reads twice — both sides of a
+  * self-join, or a sampled range layout two jobs must agree on. It keeps
+  * nothing across calls: the caller holds the cached frame in a local val
+  * and passes it to its second reader. A scalar that one call needs twice
+  * is likewise computed once and passed down. Cached frames stay pinned
+  * until [[clear]], because an operator returns a lazy plan that still
+  * reads them.
+  *
+  * [[dir]] is the on-disk staging memo: one written directory per
+  * (session, tag), reused by repeat calls.
   *
   * Weak-keyed on the live SparkSession — NOT identityHashCode, which can
-  * collide across distinct sessions and would then serve a DataFrame bound
-  * to the wrong (possibly stopped) SparkContext — so when a session becomes
-  * unreachable its entries, and the cached blocks they pin, are
+  * collide across distinct sessions and would then release or serve state
+  * bound to the wrong (possibly stopped) SparkContext — so when a session
+  * becomes unreachable its entries, and the cached blocks they pin, are
   * GC-reclaimable instead of living for the rest of the JVM.
   */
 object SessionMemo {
   private def weakMap[V]() = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, V]]())
-  private val frames = weakMap[DataFrame]()
-  private val dirs = weakMap[String]()
-  private val scalars = weakMap[AnyRef]()
+    new java.util.WeakHashMap[SparkSession, V]())
+  private val frames = weakMap[java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
+  private val dirs = weakMap[java.util.concurrent.ConcurrentHashMap[String, String]]()
 
-  private def per[V](m: java.util.Map[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, V]], spark: SparkSession) =
-    m.computeIfAbsent(spark,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, V]())
-
-  /** One `.cache()`d materialization per (session, tag); repeat calls reuse
-    * it instead of stacking redundant cached copies in executor memory.
-    *
-    * NOT computeIfAbsent: a memoized build may itself reference another
-    * memoized frame (the dedup operators share shingle/signature frames),
-    * and a nested computeIfAbsent on the same ConcurrentHashMap violates
-    * its contract — same-bin recursion throws "Recursive update" or
-    * deadlocks on a resize. get → build outside the map → putIfAbsent is
-    * reentrant. A lost putIfAbsent race is left as-is: Spark's CacheManager
-    * keys cached entries by logical-plan equality, so the loser's cache()
-    * of an identical plan is a no-op (no redundant copy exists to free) and
-    * an unpersist() here would evict the WINNER's entry too. */
-  def cache(spark: SparkSession, tag: String)(build: => DataFrame): DataFrame = {
-    val m = per(frames, spark)
-    val existing = m.get(tag)
-    if (existing != null) existing
-    else {
-      val built = build.cache()
-      val prev = m.putIfAbsent(tag, built)
-      if (prev != null) prev else built
+  /** `.cache()` `df` for a second read within the calling operator and
+    * register it for [[clear]]. When Spark's CacheManager already holds an
+    * equal plan (a repeat call over the same input), `df` reads that copy
+    * and nothing new is cached or registered. */
+  def cache(spark: SparkSession)(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) {
+      frames.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())
+        .add(df.cache()): Unit
     }
+    df
   }
 
   /** One staged directory (persisted index / written artifact) per
     * (session, tag); the dirs themselves are reaped by Tables.scratchDir's
     * exit hook (a lost putIfAbsent race leaves only an extra dir for the
-    * hook to reap). Reentrant for the same reason as [[cache]]. */
+    * hook to reap). NOT computeIfAbsent: a build may itself stage another
+    * directory, and a nested computeIfAbsent on the same ConcurrentHashMap
+    * throws "Recursive update" or deadlocks on a resize; get → build
+    * outside the map → putIfAbsent is reentrant. */
   def dir(spark: SparkSession, tag: String)(build: => String): String = {
-    val m = per(dirs, spark)
+    val m = dirs.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
     val existing = m.get(tag)
     if (existing != null) existing
     else {
@@ -64,33 +58,14 @@ object SessionMemo {
     }
   }
 
-  /** One computed scalar (a count, a probed threshold) per (session, tag).
-    * Some operators run an eager bounded Spark job at plan-construction time
-    * (the decontaminate broadcast-size probe): the FRAME was memoized but
-    * the probe job re-ran on every invocation — once standalone and again
-    * inside `llm_corpus_pipeline`. Memoizing the scalar drops the repeat
-    * jobs and keeps construction lazy after first touch. Reentrant like
-    * [[cache]]. */
-  def scalar[T](spark: SparkSession, tag: String)(build: => T): T = {
-    val m = per(scalars, spark)
-    val existing = m.get(tag)
-    if (existing != null) existing.asInstanceOf[T]
-    else {
-      val built = build.asInstanceOf[AnyRef]
-      val prev = m.putIfAbsent(tag, built)
-      (if (prev != null) prev else built).asInstanceOf[T]
-    }
-  }
-
-  /** Drop this session's memoized frames (unpersisting their cached blocks)
-    * and directory registrations. Bench's cold mode calls this between keys
-    * so every measurement pays the operator's true first-touch cost instead
-    * of a warm cache hit. */
+  /** Unpersist every frame this session cached through [[cache]] and drop
+    * its directory registrations. Bench's cold mode and perfbench call this
+    * before each key so every measurement pays the operator's true
+    * first-touch cost. */
   def clear(spark: SparkSession): Unit = {
-    val m = frames.remove(spark)
-    if (m != null)
-      m.values.forEach(df => try df.unpersist() catch { case _: Throwable => () })
+    val q = frames.remove(spark)
+    if (q != null)
+      q.forEach(df => try df.unpersist() catch { case _: Throwable => () })
     dirs.remove(spark): Unit
-    scalars.remove(spark): Unit
   }
 }

@@ -76,18 +76,16 @@ object Tables {
     * empty table an explicit error instead of a NoSuchElementException from
     * head(), and on a ragged corpus picks the widest row so shorter vectors
     * fail loudly downstream (null-poisoned zip_with → verify failure) rather
-    * than silently truncating the basis to whatever row head() returned. */
-  def embeddingDim(spark: SparkSession, sfDir: String): Int =
-    // memoized: four embedding operators probe the dim at plan-construction
-    // time, and without the memo each invocation re-runs the bounded
-    // aggregate (the repeat-job class the decontaminate probe fixed in r10)
-    SessionMemo.scalar(spark, s"$sfDir#embedding_dim") {
-      import org.apache.spark.sql.functions.{col, max, size}
-      val row = t(spark, sfDir, "embeddings").agg(max(size(col("embedding")))).head()
-      require(!row.isNullAt(0),
-        s"embeddings table at $sfDir is empty — cannot derive vector dimensionality")
-      row.getInt(0)
-    }
+    * than silently truncating the basis to whatever row head() returned.
+    * One bounded aggregate job per call: an operator that needs the dim in
+    * several places computes it once and passes it down. */
+  def embeddingDim(spark: SparkSession, sfDir: String): Int = {
+    import org.apache.spark.sql.functions.{col, max, size}
+    val row = t(spark, sfDir, "embeddings").agg(max(size(col("embedding")))).head()
+    require(!row.isNullAt(0),
+      s"embeddings table at $sfDir is empty — cannot derive vector dimensionality")
+    row.getInt(0)
+  }
 
   // ---------------------------------------------------------------------------
   // Reference Ethereum schemas (FIXTURES.md §A). decimal(38,0) for uint256

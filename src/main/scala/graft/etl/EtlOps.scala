@@ -49,8 +49,7 @@ object EtlOps {
     // removed-three-times global-window rule — use the same distributed
     // prefix sum (running count of ONES) every unbounded ranking uses.
     graft.ops.PrefixSum.exclusiveRunningSum(spark,
-        all.withColumn("one", lit(1L)), Seq("start_block"), "one",
-        "batch_id", "refplan#sorted")
+        all.withColumn("one", lit(1L)), Seq("start_block"), "one", "batch_id")
       .select(col("batch_id"), col("start_block"), col("end_block"))
       .orderBy("start_block")
   }

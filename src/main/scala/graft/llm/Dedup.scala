@@ -38,18 +38,6 @@ import graft.Tables.t
   */
 object Dedup {
 
-  /** Memoized cached intermediates, one per (session, sfDir, tag): the
-    * signature/shingle frames below are `.cache()`d because both sides of a
-    * band self-join (and the verify joins) reuse them, but a fresh cached
-    * copy per *call* accumulates redundant executor memory for the life of
-    * the JVM when Verify/Bench/tests invoke the same operator repeatedly
-    * (dedup_ngram_jaccard and dedup_containment even share the same shingle
-    * sets). Same contract as Relational.staged: one materialization per
-    * (session, input), repeat calls reuse it. Session scoping + eviction
-    * live in [[graft.SessionMemo]]. */
-  private def memoCache(spark: SparkSession, tag: String)(build: => DataFrame): DataFrame =
-    graft.SessionMemo.cache(spark, s"dedup#$tag")(build)
-
   /** Tokenizer for every typed hot loop in this family: limit -1 keeps
     * trailing empty tokens, matching Spark SQL `split()` (limit -1) and the
     * DuckDB oracles' `string_split` exactly. Java's default
@@ -61,10 +49,6 @@ object Dedup {
     * codePointCount on the Spark side. */
   private def toks(text: String): Array[String] =
     if (text == null) Array.empty[String] else text.split(" ", -1)
-
-  /** SPARK_GRAFT_CC_LOG=1 → per-round stderr timing of the closure loops
-    * (scale-probe instrumentation; off in normal runs). */
-  private val ccLog = sys.env.get("SPARK_GRAFT_CC_LOG").contains("1")
 
   /** Explicit-width hash repartition for a stage about to run CPU-heavy
     * per-row work on a small row count. A user-specified partition count
@@ -228,10 +212,10 @@ object Dedup {
     * one md5 + ids per passage occurrence, never the text. */
   def dedupParagraph(spark: SparkSession, dir: String): DataFrame = {
     val chunkLen = 20
-    val toksDf = memoCache(spark, s"$dir#paragraph_toks") {
-      t(spark, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("tk"))
-    } // barrier: keeps split() out of the chunk lambdas (see shinglesOf)
+    // its own projection: tk has two readers below (size and the chunk
+    // lambda), so CollapseProject keeps split() out of the lambda
+    val toksDf = t(spark, dir, "documents")
+      .select(col("doc_id"), split(col("text"), " ").as("tk"))
     val nChunks = ceil(size(col("tk")) / lit(chunkLen.toDouble)).cast(IntegerType)
     val chunks = toksDf
       .select(col("doc_id"),
@@ -289,9 +273,9 @@ object Dedup {
     val M = 2147483647L // 2^31 - 1 (Mersenne prime)
     val mixA = Array.tabulate(nHashes)(p => ((p + 1) * 2654435761L) % M)
     val mixB = Array.tabulate(nHashes)(p => p * 40503L + 1L)
-    val docs = memoCache(spark, s"$dir#editdist_docs") {
-      t(spark, dir, "documents").select(col("doc_id"), col("text"))
-    } // reused by the signature pass + both sides of the verify join
+    // second readers: the max-length stats job and both verify-join sides
+    val docs = graft.SessionMemo.cache(spark)(
+      t(spark, dir, "documents").select(col("doc_id"), col("text")))
 
     // p-th min-hash: min over distinct word-3-gram shingles of
     // (a_p·h + b_p) mod (2³¹−1), where h = (first 15 hex digits of
@@ -305,7 +289,8 @@ object Dedup {
     // min over the distinct set, so no dedup pass is needed. Emit one
     // fixed-width row per (band, length-bucket ∈ {own, next}).
     import spark.implicits._
-    val banded = memoCache(spark, s"$dir#editdist_banded") { docs.as[(Long, String)].mapPartitions { rows =>
+    // second reader: both sides of the band self-join
+    val banded = graft.SessionMemo.cache(spark) { docs.as[(Long, String)].mapPartitions { rows =>
       val md = java.security.MessageDigest.getInstance("MD5")
       val sb = new java.lang.StringBuilder(64)
       rows.flatMap { case (docId, text) =>
@@ -338,7 +323,7 @@ object Dedup {
         }
       }
     }.toDF("doc_id", "band", "lbk", "h1", "h2")
-    } // both sides of the self-join: uncached, the whole digest pass runs twice
+    }
 
     val candidates = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.lbk") === col("y.lbk") &&
@@ -387,8 +372,7 @@ object Dedup {
     * verification is a set intersection on those arrays (equal to string
     * Jaccard up to 64-bit collisions, ~1e-14 per pair). */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    val sigDocs = minhashSignatureIndex(spark, t(spark, dir, "documents"),
-      Some(s"$dir#minhash_sigs"))
+    val sigDocs = minhashSignatureIndex(spark, t(spark, dir, "documents"))
 
     val bands = bandsOf(sigDocs)
 
@@ -421,8 +405,7 @@ object Dedup {
     * (LlmOpsSpec pins output equality with the classic path on testdata).
     */
   def dedupMinhashOph(spark: SparkSession, dir: String): DataFrame = {
-    val sigDocs = ophSignatureIndex(spark, t(spark, dir, "documents"),
-      Some(s"$dir#oph_sigs"))
+    val sigDocs = ophSignatureIndex(spark, t(spark, dir, "documents"))
 
     val bands = bandsOf(sigDocs)
 
@@ -438,9 +421,8 @@ object Dedup {
   /** OPH signature index: schema-compatible with [[minhashSignatureIndex]]
     * ((doc_id, shs, sigs)) so the banding join and the exact verification
     * are shared verbatim. One mix per shingle; 64 bins; rotation
-    * densification for empty bins. */
-  def ophSignatureIndex(spark: SparkSession, documents: DataFrame,
-                        memoTag: Option[String] = None): DataFrame = {
+    * densification for empty bins. Cached like [[minhashSignatureIndex]]. */
+  def ophSignatureIndex(spark: SparkSession, documents: DataFrame): DataFrame = {
     val nBins = 64
     val bandRows = 4
     val nBands = nBins / bandRows
@@ -451,7 +433,8 @@ object Dedup {
     val hopC = 0xBF58476D1CE4E5B9L // per-hop offset for densified copies
 
     import spark.implicits._
-    def build: DataFrame = documents
+    // second reader: both band self-join sides and both verify sides
+    graft.SessionMemo.cache(spark)(documents
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].mapPartitions { rows =>
         val sb = new java.lang.StringBuilder(64)
@@ -483,11 +466,7 @@ object Dedup {
             Iterator.single((docId, shs, foldBands(dense, nBands, bandRows)))
           }
         }
-      }.toDF("doc_id", "shs", "sigs")
-    memoTag match {
-      case Some(tag) => memoCache(spark, tag)(build)
-      case None => build.cache()
-    }
+      }.toDF("doc_id", "shs", "sigs"))
   }
 
   /** Explode a signature frame into one (doc_id, band, sig) row per band —
@@ -562,8 +541,7 @@ object Dedup {
       sig
     }
 
-  def minhashSignatureIndex(spark: SparkSession, documents: DataFrame,
-                            memoTag: Option[String] = None): DataFrame = {
+  def minhashSignatureIndex(spark: SparkSession, documents: DataFrame): DataFrame = {
     val nHashes = 64
     val bandRows = 4
     val nBands = nHashes / bandRows
@@ -594,14 +572,10 @@ object Dedup {
           }
         }
       }.toDF("doc_id", "shs", "sigs")
-    // band pass + both verification sides reuse the frame → cache; memoize
-    // per (session, corpus) when dir-bound so repeat calls share one copy
-    memoTag match {
-      case Some(tag) => memoCache(spark, tag)(build)
-      // a streaming documents frame cannot cache (its single consumer,
-      // the band-claim stream, reads it once per micro-batch anyway)
-      case None => if (documents.isStreaming) build else build.cache()
-    }
+    // second reader: both band self-join sides and both verify sides. A
+    // streaming documents frame cannot cache (its single consumer, the
+    // band-claim stream, reads it once per micro-batch anyway).
+    if (documents.isStreaming) build else graft.SessionMemo.cache(spark)(build)
   }
 
   /** `dedup_ngram_jaccard` — near-dup pairs via an inverted index on hashed
@@ -634,8 +608,10 @@ object Dedup {
   // here: unlike the banded dedups, nothing needs reproducing in the
   // oracle — the oracles brute-force string-set overlap, and hash-set
   // overlap equals string overlap up to 64-bit collisions (~1e-14/pair).
-  // Shared by dedupNgramJaccard and dedupContainment.
-  private[graft] def hashedShingleSets(spark: SparkSession, dir: String): DataFrame = memoCache(spark, s"$dir#shingle5") {
+  // Shared by dedupNgramJaccard, dedupContainment and dedupSetsimPrefix;
+  // cached because each reads it at least twice (second reader: the
+  // verification join sides after the posting / prefix-index pass).
+  private[graft] def hashedShingleSets(spark: SparkSession, dir: String): DataFrame = graft.SessionMemo.cache(spark) {
     import spark.implicits._
     t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -668,8 +644,7 @@ object Dedup {
           }
         }
       }.toDF("doc_id", "shs")
-  } // memoCache: reused by the posting pass + both verification sides, and
-    // shared across dedupNgramJaccard / dedupContainment invocations
+  }
 
   // Inverted index without an aggregation operator: most shingles are
   // unique to one document, so a collect_list groupBy materializes ~|corpus
@@ -809,8 +784,9 @@ object Dedup {
     * `shs` must be (doc_id: Long, shs: sorted distinct Array[Long]).
     *
     * `minIdBound` restricts pair GENERATION to pairs whose smaller doc_id
-    * is < the bound, and `indexTag` memoizes the (corpus-wide) prefix
-    * index so a staged caller pays the index build once. Exactness under
+    * is < the bound, and `prefixIndex` takes a prebuilt (cached)
+    * [[setsimPrefixIndex]] of the same `shs` and threshold so a staged
+    * caller pays the index build once. Exactness under
     * the bound: a pair (a, b) with min(a, b) < K survives, so for every
     * document with doc_id < K the restricted output contains its COMPLETE
     * J ≥ t pair set — [[graft.llm.Similarity.simHardNegatives]] exploits
@@ -837,14 +813,11 @@ object Dedup {
 
   private[graft] def setsimPrefixPairs(
       spark: SparkSession, shs: DataFrame, Num: Int, Den: Int,
-      minIdBound: Long = Long.MaxValue, indexTag: Option[String] = None): DataFrame = {
+      minIdBound: Long = Long.MaxValue,
+      prefixIndex: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
 
-    val prefix = indexTag match {
-      case Some(tag) => memoCache(spark, s"$tag#prefix_${Num}_$Den")(
-        setsimPrefixIndex(shs, Num, Den))
-      case None      => setsimPrefixIndex(shs, Num, Den)
-    }
+    val prefix = prefixIndex.getOrElse(setsimPrefixIndex(shs, Num, Den))
 
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val pairs = prefix
@@ -907,17 +880,18 @@ object Dedup {
     // (1.45 G vs 319 M measured), while below the switch both are trivial
     // and the 4-row fan-out is cheaper. Both schemes are pigeonhole-EXACT
     // for Hamming ≤ 3 (spec-pinned equal), so the switch changes cost,
-    // never the answer. The count is on the memoized fingerprint frame —
+    // never the answer. The count is on the cached fingerprint frame —
     // it warms the cache both join sides reuse.
     simhashPairs(sim, manku = sim.count() > SimhashMankuSwitchDocs)
   }
 
-  /** The memoized FNV-1a fingerprint pass behind [[dedupSimhash]] —
+  /** The cached FNV-1a fingerprint pass behind [[dedupSimhash]] —
     * exposed so [[DensityProbe]] measures candidate volume on the real
-    * fingerprints. */
+    * fingerprints. Second readers: the size count and both sides of the
+    * block self-join. */
   private[graft] def simhashFingerprints(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    memoCache(spark, s"$dir#simhash_fp") { healScanStarvation(
+    graft.SessionMemo.cache(spark) { healScanStarvation(
       t(spark, dir, "documents").select(col("doc_id"), col("text")), col("doc_id"))
       .as[(Long, String)].mapPartitions { rows =>
       rows.map { case (docId, text) =>
@@ -941,7 +915,7 @@ object Dedup {
         (docId, fp)
       }
     }.toDF("doc_id", "simhash")
-    } // both sides of the block self-join: uncached, the vote pass runs twice
+    }
   }
 
   /** Above this many documents, [[dedupSimhash]] switches its candidate
@@ -1139,8 +1113,7 @@ object Dedup {
     val docs = t(spark, dir, "documents")
     val isNew = isNewDoc
     val corpusIdx = spark.read.parquet(s"${corpusIndexDir(spark, dir)}/sigs")
-    val newSigs = minhashSignatureIndex(spark, docs.filter(isNew),
-      Some(s"$dir#inc_new_sigs"))
+    val newSigs = minhashSignatureIndex(spark, docs.filter(isNew))
     val newBands = bandsOf(newSigs)
     val probe = newBands.as("x").join(bandsOf(corpusIdx).as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig"))
@@ -1200,11 +1173,11 @@ object Dedup {
         .select(col("doc_id"), col("pos").as("chunk_idx"), col("col").as("passage"))
     }
     val docs = t(spark, dir, "documents")
-    val hist = memoCache(spark, s"$dir#bloom_hist_passages") {
+    // second readers: the size count, the bloom build and the exact join
+    val hist = graft.SessionMemo.cache(spark)(
       passages(docs.filter(!isNewDoc))
-        .select(col("doc_id").as("corpus_doc"), col("passage"))
-    }
-    val bloomBytes = graft.SessionMemo.scalar(spark, s"$dir#inc_bloom") {
+        .select(col("doc_id").as("corpus_doc"), col("passage")))
+    val bloomBytes = {
       val n = hist.count().max(1L)
       val bf = hist.select(xxhash64(col("passage")).as("h")).stat
         .bloomFilter("h", n, 0.03)
@@ -1250,12 +1223,10 @@ object Dedup {
       .filter(col("doc_id") =!= col("m"))
       .select(col("doc_id").as("doc_a"), col("m").as("doc_b"))
     val nearEdges = dedupMinhashLsh(spark, dir).select("doc_a", "doc_b")
-    // the assignment is corpus state a pipeline persists between runs —
-    // resolve the (eager) closure once per (JVM, corpus) and reuse
-    val cc = memoCache(spark, s"$dir#clusters_cc") {
-      connectedComponents(spark, docs.select("doc_id"),
-        exactEdges.unionByName(nearEdges))
-    }
+    // eager closure; its labels are local-checkpointed, so the two reads
+    // below (sizes, join) rescan the checkpoint, never the edges
+    val cc = connectedComponents(spark, docs.select("doc_id"),
+      exactEdges.unionByName(nearEdges))
     val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
@@ -1290,7 +1261,6 @@ object Dedup {
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 50) {
-      val tRound = System.nanoTime()
       val prop = sym.join(labels, sym("doc_b") === labels("doc_id"))
         .select(sym("doc_a").as("doc_id"), col("label"))
       val next = labels.unionByName(prop)
@@ -1300,8 +1270,6 @@ object Dedup {
         .filter(col("n.label") =!= col("p.label")).count()
       labels = next
       rounds += 1
-      if (ccLog) System.err.println(
-        f"[cc-labelprop] round $rounds: ${(System.nanoTime() - tRound) / 1e9}%.2f s, changed=$changed")
     }
     sym.unpersist()
     require(changed == 0, s"connectedComponents did not converge in $rounds rounds")
@@ -1326,10 +1294,10 @@ object Dedup {
   def dedupClustersIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
     val p = corpusIndexDir(spark, dir)
-    // "yesterday's" assignment: corpus-only clusters, resolved once per
-    // (JVM, corpus) from the persisted index halves and then reused — the
-    // state a real pipeline reads back from its last run's output
-    val corpusClusters = memoCache(spark, s"$dir#corpus_clusters") {
+    // "yesterday's" assignment: corpus-only clusters resolved from the
+    // persisted index halves — the state a real pipeline reads back from
+    // its last run's output
+    val corpusClusters = {
       val sigs = spark.read.parquet(s"$p/sigs")
       val dgs = spark.read.parquet(s"$p/digests")
       val wD = org.apache.spark.sql.expressions.Window.partitionBy("dg")
@@ -1360,10 +1328,8 @@ object Dedup {
       .select(least(col("n.doc_id"), col("a.doc_id")).as("doc_a"),
         greatest(col("n.doc_id"), col("a.doc_id")).as("doc_b"))
       .distinct()
-    val cc = memoCache(spark, s"$dir#clusters_cc_inc") {
-      connectedComponents(spark, docs.select("doc_id"),
-        stars.unionByName(incPairs).unionByName(exactNew))
-    }
+    val cc = connectedComponents(spark, docs.select("doc_id"),
+      stars.unionByName(incPairs).unionByName(exactNew))
     val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
@@ -1390,10 +1356,10 @@ object Dedup {
       .filter(col("doc_id") =!= col("m"))
       .select(col("doc_id").as("doc_a"), col("m").as("doc_b"))
     val nearEdges = dedupMinhashLsh(spark, dir).select("doc_a", "doc_b")
-    val cc = memoCache(spark, s"$dir#clusters_cc_star") {
+    // second reader: the join back after the sizes aggregate
+    val cc = graft.SessionMemo.cache(spark)(
       connectedComponentsLogStar(spark, docs.select("doc_id"),
-        exactEdges.unionByName(nearEdges))
-    }
+        exactEdges.unionByName(nearEdges)))
     val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
@@ -1429,7 +1395,6 @@ object Dedup {
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 40) {
-      val tRound = System.nanoTime()
       // large-star over the symmetric list: u = doc_a, neighbors b
       val sym = cur.unionByName(
         cur.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
@@ -1451,8 +1416,6 @@ object Dedup {
       changed = next.exceptAll(cur).count() + cur.exceptAll(next).count()
       cur = next
       rounds += 1
-      if (ccLog) System.err.println(
-        f"[cc-star] round $rounds: ${(System.nanoTime() - tRound) / 1e9}%.2f s, changed=$changed")
     }
     require(changed == 0, s"connectedComponentsLogStar did not converge in $rounds rounds")
     // fixpoint is a star forest: cluster = min(self, min neighbor)
@@ -1483,13 +1446,11 @@ object Dedup {
     *    entirely (its members are near-dups of contaminated content —
     *    keeping them would defeat the decontamination).
     *
-    * Plan shape: every stage reuses its already-verified operator and the
-    * session-memoized token/shingle/gram frames underneath them, so
+    * Plan shape: every stage reuses its already-verified operator, so
     * composing the stages adds doc_id equi-joins (semi for the id-set
-    * filters, one left for the cut accounting) but NO new corpus-wide
-    * shuffles — the documents table is tokenized once per distinct
-    * tokenization, not once per stage. The id-set sides are
-    * corpus-fractions; AQE broadcasts them when small. */
+    * filters, one left for the cut accounting) on top of the stages' own
+    * shuffles. The id-set sides are corpus-fractions; AQE broadcasts them
+    * when small. */
   def llmCorpusPipeline(spark: SparkSession, dir: String): DataFrame = {
     val tk = split(col("text"), " ")
     val quality = t(spark, dir, "documents")
@@ -1532,8 +1493,8 @@ object Dedup {
     * docs; its row shows the token mass the span cuts removed from the
     * final survivors.
     *
-    * Plan shape: every per-stage verdict comes from the SAME memoized
-    * frames the pipeline itself uses (repetition keep-set, decontaminate
+    * Plan shape: every per-stage verdict comes from the SAME operators
+    * the pipeline itself uses (repetition keep-set, decontaminate
     * survivor set, cluster canonicals, cut accounting), joined once on
     * doc_id; the funnel then collapses to ONE wide aggregate row of
     * conditional sums (the [[graft.etl.EtlOps.etlQualityAudit]]
@@ -1615,8 +1576,8 @@ object Dedup {
     * 5M ids ≈ 40 MB). Over the limit the anti-join degrades to a shuffle
     * equi-join on doc_id — same correctness, one more exchange — instead of
     * a driver/executor OOM from force-broadcasting an unbounded set. The
-    * count needs the id set twice (decide + join), so it is persisted via
-    * the session memo. If the "benchmark" side ever grows beyond broadcast
+    * count needs the id set twice (decide + join), so it is cached. If the
+    * "benchmark" side ever grows beyond broadcast
     * size the same fallback applies to the first semi-join: dropping that
     * hint yields a shuffle equi-join on the shingle hash. Both sides join
     * on the shingles' xxhash64 (never a joined string): a false
@@ -1625,28 +1586,26 @@ object Dedup {
     * the join keys drop from ~40-byte strings to 8 bytes. */
   def dedupDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val isBench = col("doc_id") % 97 === 0
-    val toksDf = memoCache(spark, s"$dir#decontam_toks") {
+    // second readers: the benchmark shingles, the contaminated ids and the
+    // anti-join; the cache also keeps split() out of the shingle lambda
+    // (see shinglesOf)
+    val toksDf = graft.SessionMemo.cache(spark)(
       t(spark, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"),
-          split(col("text"), " ").as("tk"))
-    } // barrier: keeps split() out of the shingle lambda (see shinglesOf)
+          split(col("text"), " ").as("tk")))
     val grams = shingleHashesOf(col("tk"), 5)
     val benchGrams = toksDf.filter(isBench)
       .select(explode(grams).as("g")).distinct()
-    val contaminated = memoCache(spark, s"$dir#decontam_ids") {
+    // second reader: the anti-join after the size count
+    val contaminated = graft.SessionMemo.cache(spark)(
       toksDf.filter(!isBench)
         .select(col("doc_id"), explode(grams).as("g"))
         .join(broadcast(benchGrams), Seq("g"), "left_semi")
-        .select("doc_id").distinct()
-    }
+        .select("doc_id").distinct())
     val idLimit = spark.conf.getOption("graft.decontaminate.broadcastIdLimit")
       .map(_.toLong).getOrElse(5000000L)
-    // the size probe is an eager job at plan-construction time; memoize the
-    // COUNT alongside the memoized frame so repeat invocations (standalone +
-    // inside llm_corpus_pipeline) don't re-run it
-    val nContaminated = graft.SessionMemo.scalar(spark, s"$dir#decontam_n") {
-      contaminated.count()
-    }
+    // the size probe is an eager job at plan-construction time
+    val nContaminated = contaminated.count()
     val contaminatedSide =
       if (nContaminated <= idLimit) broadcast(contaminated) else contaminated
     toksDf.filter(!isBench)
@@ -1680,7 +1639,8 @@ object Dedup {
   def dedupSubstring(spark: SparkSession, dir: String): DataFrame = {
     val L = 10
     import spark.implicits._
-    val grams = memoCache(spark, s"$dir#substring_grams") {
+    // second reader: the semi-join probe after the dup-window aggregate
+    val grams = graft.SessionMemo.cache(spark) {
       t(spark, dir, "documents")
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .mapPartitions { rows =>
@@ -1701,7 +1661,7 @@ object Dedup {
             }
           }
         }.toDF("doc_id", "pos", "h")
-    } // cached: feeds both the dup-window aggregate and the semi-join probe
+    }
     val dupWindows = grams.groupBy("h")
       .agg((min("doc_id") =!= max("doc_id")).as("crossdoc"))
       .filter(col("crossdoc")).select("h")
@@ -1786,8 +1746,7 @@ object Dedup {
     // silently zero the sign bits (null-poisoned zip_with) and collapse
     // every vector into one bucket
     val dim = graft.Tables.embeddingDim(spark, dir)
-    embeddingCosinePairs(spark, augmentedEmbeddings(spark, dir), dim, 0.95,
-      Some(s"$dir#embcos"))
+    embeddingCosinePairs(spark, augmentedEmbeddings(spark, dir), dim, 0.95)
   }
 
   /** The embeddings table augmented with the deterministic planted
@@ -1833,11 +1792,9 @@ object Dedup {
     * check; the spec mirrors the full rule exactly on collected data. */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
     val threshold = 0.95
-    val emb = augmentedEmbeddings(spark, dir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
-    val cents = Similarity.trainedCentroids(spark, dir)
-    val assigned = memoCache(spark, s"$dir#semdedup_assign")(
-      Similarity.assignCells(emb, cents))
+    // second readers: both sides of the candidate join, the vector
+    // re-joins and the final keep/drop join
+    val assigned = graft.SessionMemo.cache(spark)(semdedupAssigned(spark, dir))
 
     // ids-only candidate pairs: same cell, j strictly earlier than i in
     // (d2c desc, vec_id asc) order — the vector payload joins back in only
@@ -1867,11 +1824,21 @@ object Dedup {
       .orderBy("vec_id")
   }
 
+  /** The (vec_id, v, cell, d2c) cell assignment [[dedupSemantic]] dedups
+    * within: the augmented embeddings against the IVF centroids trained on
+    * the plain corpus. */
+  private[graft] def semdedupAssigned(spark: SparkSession, dir: String): DataFrame = {
+    val emb = augmentedEmbeddings(spark, dir)
+      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
+    val cents = Similarity.trainedCentroids(spark, Similarity.ivfVecs(spark, dir),
+      graft.Tables.embeddingDim(spark, dir))
+    Similarity.assignCells(emb, cents)
+  }
+
   /** Core of `dedup_embedding_cosine`, reusable on any (vec_id, embedding)
-    * frame (the query key binds it to the testdata embeddings table, with a
-    * memo tag so repeat invocations share the cached signature frames). */
+    * frame (the query key binds it to the testdata embeddings table). */
   def embeddingCosinePairs(spark: SparkSession, emb: DataFrame, dim: Int,
-                           threshold: Double, memoTag: Option[String] = None): DataFrame = {
+                           threshold: Double): DataFrame = {
     // Band WIDTH scales with log2(n) (floor 16, cap 24): a random
     // (near-orthogonal) pair collides in a band w.p. 2^-bits, so FIXED bits
     // make the random-collision candidate mass Θ(n²·2^-bits) — the same
@@ -1886,10 +1853,7 @@ object Dedup {
     // ≈ 2e-7; past ~16M vectors one raises nPlanes to keep ≥ 10 bands
     // rather than widening further.
     val nPlanes = 256
-    val nVec: Long = memoTag match {
-      case Some(t0) => graft.SessionMemo.scalar(spark, s"$t0#nvec")(emb.count())
-      case None => emb.count()
-    }
+    val nVec = emb.count()
     val bandBits = math.min(24, math.max(16,
       math.ceil(math.log(math.max(nVec, 2).toDouble) / math.log(2)).toInt))
     val nBands = nPlanes / bandBits
@@ -1898,16 +1862,13 @@ object Dedup {
       Array.fill(dim)(rnd.nextDouble() * 2 - 1)
     }
 
-    def cached(tag: String)(build: => DataFrame): DataFrame = memoTag match {
-      case Some(t0) => memoCache(spark, s"$t0#$tag")(build)
-      case None => build.cache()
-    }
-    val vecs = cached("vecs") { emb
-      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
-    } // reused by signature pass + both verify sides
+    // second readers: the signature pass and both verify sides
+    val vecs = graft.SessionMemo.cache(spark)(emb
+      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v")))
 
     import spark.implicits._
-    val bands = cached("bands") { vecs.as[(Long, Seq[Double])].mapPartitions { rows =>
+    // second reader: both sides of the band self-join
+    val bands = graft.SessionMemo.cache(spark) { vecs.as[(Long, Seq[Double])].mapPartitions { rows =>
       rows.flatMap { case (vecId, v) =>
         val arr = v.toArray
         val bits = new Array[Int](nPlanes)
@@ -1928,7 +1889,7 @@ object Dedup {
         }
       }
     }.toDF("vec_id", "band", "key")
-    } // both sides of the self-join: uncached, the hyperplane pass runs twice
+    }
 
     val candidates = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&

@@ -243,10 +243,7 @@ object Retrieval {
         .write.mode("overwrite").parquet(s"$p/prefix")
       p
     }
-    // the narrow column is exactly what a serving tier keeps HOT: memoize
-    // the scan (half the bytes of the full vectors at the same row count)
-    val prefixes = graft.SessionMemo.cache(spark, s"$dir#vec_prefix_hot")(
-      spark.read.parquet(s"$prefixPath/prefix"))
+    val prefixes = spark.read.parquet(s"$prefixPath/prefix")
 
     val wc = Window.partitionBy("query_id").orderBy(col("coarse").desc, col("vec_id"))
     val shortlist = prefixes.join(broadcast(queries), col("vec_id") =!= col("query_id"))

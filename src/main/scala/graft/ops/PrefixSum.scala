@@ -21,8 +21,7 @@ import org.apache.spark.sql.types.LongType
   * The cache between the passes is load-bearing for CORRECTNESS, not just
   * cost: the range partitioner SAMPLES its bounds, so the two passes must
   * read the same materialized layout — re-executing the exchange could
-  * re-sample a different partitioning and misalign the offsets. Callers
-  * pass a session-memo tag so repeat invocations share one cached copy.
+  * re-sample a different partitioning and misalign the offsets.
   */
 object PrefixSum {
 
@@ -32,8 +31,8 @@ object PrefixSum {
     * orderBy for a globally sorted presentation. */
   def exclusiveRunningSum(spark: SparkSession, df: DataFrame,
                           orderCols: Seq[String], valueCol: String,
-                          outCol: String, memoTag: String): DataFrame =
-    exclusiveRunningSumWithTotal(spark, df, orderCols, valueCol, outCol, memoTag)._1
+                          outCol: String): DataFrame =
+    exclusiveRunningSumWithTotal(spark, df, orderCols, valueCol, outCol)._1
 
   /** [[exclusiveRunningSum]] plus the GLOBAL total of `valueCol` — the last
     * entry of the driver's exclusive scan, i.e. already computed from the
@@ -42,11 +41,11 @@ object PrefixSum {
     * the cached frame for a number the scan had in hand. */
   def exclusiveRunningSumWithTotal(spark: SparkSession, df: DataFrame,
                                    orderCols: Seq[String], valueCol: String,
-                                   outCol: String, memoTag: String): (DataFrame, Long) = {
-    val sorted = graft.SessionMemo.cache(spark, memoTag) {
+                                   outCol: String): (DataFrame, Long) = {
+    // second reader: the offset-emitting job 2 must scan the layout job 1 summed
+    val sorted = graft.SessionMemo.cache(spark)(
       df.repartitionByRange(orderCols.map(col): _*)
-        .sortWithinPartitions(orderCols.map(col): _*)
-    }
+        .sortWithinPartitions(orderCols.map(col): _*))
     val vIdx = sorted.schema.fieldIndex(valueCol)
     require(sorted.schema(vIdx).dataType == LongType,
       s"$valueCol must be LongType, got ${sorted.schema(vIdx).dataType}")

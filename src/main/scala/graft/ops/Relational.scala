@@ -493,8 +493,7 @@ object Relational {
     gapsOf(spark,
       t(spark, dir, "orders")
         .filter(col("o_orderstatus") === "F")
-        .select(col("o_orderkey").as("k")),
-      s"$dir#gap_sorted")
+        .select(col("o_orderkey").as("k")))
 
   /** Core of [[etlGapDetect]] over any LongType `k` column: the maximal
     * runs absent from the key set, as (gap_start, gap_end, n_missing).
@@ -503,13 +502,12 @@ object Relational {
     * can drive constructed key sets — duplicates, gaps exactly on
     * partition boundaries, empty partitions — through the identical
     * plumbing. */
-  private[graft] def gapsOf(spark: SparkSession, keys: DataFrame,
-                            memoTag: String): DataFrame = {
+  private[graft] def gapsOf(spark: SparkSession, keys: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    val sorted = graft.SessionMemo.cache(spark, memoTag) {
-      keys.repartitionByRange(col("k")).sortWithinPartitions("k")
-    }
+    // second reader: the pair-scan job must see the layout job 1 took firsts of
+    val sorted = graft.SessionMemo.cache(spark)(
+      keys.repartitionByRange(col("k")).sortWithinPartitions("k"))
     val internal = sorted.queryExecution.toRdd
     val nParts = internal.getNumPartitions
     // job 1 — O(P) driver state: each non-empty partition's first key
@@ -924,23 +922,20 @@ object Relational {
     * table; the reference's Data Pipeline activities have no audit at all —
     * this is the Spark-native upgrade. The observed metrics surface as a
     * one-row DataFrame, oracle-checked against the same aggregates in SQL.
-    * Memoized per (session, dir): one write+observe, repeat calls reuse the
-    * collected row (cold mode clears the memo and re-runs the real thing). */
+    * Every call runs the write+observe. */
   def etlObserveMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = graft.SessionMemo.scalar(spark, s"$dir#observe_metrics") {
-      val obs = org.apache.spark.sql.Observation(s"audit_$dir")
-      val p = graft.Tables.scratchDir("observe")
-      t(spark, dir, "lineitem")
-        .observe(obs,
-          count(lit(1)).as("n_rows"),
-          sum(col("l_quantity").cast(DecimalType(18, 2))).cast(DecimalType(38, 2)).as("sum_qty"),
-          count(when(col("l_returnflag") === "R", 1)).as("n_returned"),
-          min(unix_micros(col("l_shipdate").cast("timestamp"))).as("min_ship_us"),
-          max(unix_micros(col("l_shipdate").cast("timestamp"))).as("max_ship_us"))
-        .write.mode("overwrite").parquet(p)
-      obs.get
-    }
+    val obs = org.apache.spark.sql.Observation(s"audit_$dir")
+    val p = graft.Tables.scratchDir("observe")
+    t(spark, dir, "lineitem")
+      .observe(obs,
+        count(lit(1)).as("n_rows"),
+        sum(col("l_quantity").cast(DecimalType(18, 2))).cast(DecimalType(38, 2)).as("sum_qty"),
+        count(when(col("l_returnflag") === "R", 1)).as("n_returned"),
+        min(unix_micros(col("l_shipdate").cast("timestamp"))).as("min_ship_us"),
+        max(unix_micros(col("l_shipdate").cast("timestamp"))).as("max_ship_us"))
+      .write.mode("overwrite").parquet(p)
+    val m = obs.get
     // On an empty input sum/min/max observe as null (sum_qty would NPE and
     // the bounds would silently unbox to epoch-1970 zeros — a plausible-
     // looking but fabricated audit row). An audit over nothing is a

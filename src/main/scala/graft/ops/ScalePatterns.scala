@@ -160,12 +160,7 @@ object ScalePatterns {
     val dim = t(spark, dir, "orders")
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("m")).distinct()
       .withColumn("y", substring(col("m"), 1, 4))
-    // memoized: the probe is a bounded aggregate, but running it at plan
-    // construction on EVERY invocation re-scans orders per call (the same
-    // repeat-job leak the decontaminate broadcast probe had, r10 ADVICE)
-    val minYear = graft.SessionMemo.scalar(spark, s"$dir#dpp_min_year") {
-      dim.agg(min(col("y"))).head().getString(0)
-    }
+    val minYear = dim.agg(min(col("y"))).head().getString(0)
     fact.join(broadcast(dim.filter(col("y") === minYear)), col("o_month") === col("m"))
   }
 
@@ -217,10 +212,8 @@ object ScalePatterns {
     * regenerates. */
   def scanCatalog(spark: SparkSession, dir: String): DataFrame = {
     val (baseT, partT) = ensureCatalogOrders(spark, dir)
-    val minMonth = graft.SessionMemo.scalar(spark, s"$dir#catalog_min_month") {
-      spark.table(baseT)
-        .agg(min(date_format(col("o_orderdate"), "yyyy-MM"))).head().getString(0)
-    }
+    val minMonth = spark.table(baseT)
+      .agg(min(date_format(col("o_orderdate"), "yyyy-MM"))).head().getString(0)
     catalogPrunedScan(spark, partT, minMonth)
       .groupBy("o_month")
       .agg(count(lit(1)).as("n"),

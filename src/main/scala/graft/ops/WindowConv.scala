@@ -40,14 +40,13 @@ object WindowConv {
     * partition-ordered by `orderCols`; apply a final orderBy for a
     * globally sorted presentation. */
   def firConvolve(spark: SparkSession, df: DataFrame, orderCols: Seq[String],
-                  valueCol: String, weights: Array[Long], outCol: String,
-                  memoTag: String): DataFrame = {
+                  valueCol: String, weights: Array[Long], outCol: String): DataFrame = {
     require(weights.nonEmpty, "at least one tap")
     val carryLen = weights.length - 1
-    val sorted = graft.SessionMemo.cache(spark, memoTag) {
+    // second reader: the convolution job 2 must scan the layout job 1 took tails of
+    val sorted = graft.SessionMemo.cache(spark)(
       df.repartitionByRange(orderCols.map(col): _*)
-        .sortWithinPartitions(orderCols.map(col): _*)
-    }
+        .sortWithinPartitions(orderCols.map(col): _*))
     val vIdx = sorted.schema.fieldIndex(valueCol)
     require(sorted.schema(vIdx).dataType == LongType,
       s"$valueCol must be LongType, got ${sorted.schema(vIdx).dataType}")

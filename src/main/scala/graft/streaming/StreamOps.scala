@@ -445,8 +445,7 @@ object StreamOps {
     * executor state store holds ZERO bytes — spec-proven claim-identical
     * to this fold across compaction boundaries and a replayed batch. */
   def streamDedupMinhash(spark: SparkSession, dir: String): DataFrame = {
-    val sigDocs = graft.llm.Dedup.minhashSignatureIndex(
-      spark, t(spark, dir, "documents"), Some(s"$dir#minhash_sigs"))
+    val sigDocs = graft.llm.Dedup.minhashSignatureIndex(spark, t(spark, dir, "documents"))
     val cand = bandClaims(sigDocs).distinct()
     val va = sigDocs.select(col("doc_id"), col("shs").as("sa"))
     val vb = sigDocs.select(col("doc_id").as("cand"), col("shs").as("sb"))

@@ -365,8 +365,7 @@ class LlmOpsSpec extends SparkTestBase {
     // 32x-compression claim (8 small ints vs 64 floats) is structural, and
     // the codebooks are genuinely used: more than one code value appears
     // per subspace (a degenerate codebook would collapse ADC to a constant)
-    val enc = graft.SessionMemo.cache(spark, s"$sf#ivfpq_codes")(
-      fail("codes frame must already be memoized by the query above"))
+    val enc = Similarity.simSearchIvfPqWithCodes(spark, sf)._2
     val codes = enc.collect().map(_.getSeq[Int](enc.schema.fieldIndex("codes")))
     assert(codes.nonEmpty && codes.forall(c => c.length == 8 && c.forall(j => j >= 0 && j < 16)))
     assert((0 until 8).forall(m => codes.map(_(m)).distinct.length > 1))
@@ -453,8 +452,7 @@ class LlmOpsSpec extends SparkTestBase {
   test("stagedAnchors: staged id-prefix search equals the unbounded exact join at every stage-loop forcing") {
     import Similarity.HardNeg._
     import org.apache.spark.sql.expressions.Window
-    val sigDocs = Dedup.minhashSignatureIndex(spark, graft.Tables.t(spark, sf, "documents"),
-      Some(s"$sf#minhash_sigs"))
+    val sigDocs = Dedup.minhashSignatureIndex(spark, graft.Tables.t(spark, sf, "documents"))
     // reference = the r13 full-corpus exact join's anchor set
     val pairs = Dedup.setsimPrefixPairs(spark, sigDocs.select(col("doc_id"), col("shs")), 8, 10)
     val sym = pairs.select(col("doc_a").as("anchor_id"), col("doc_b").as("p"), col("jaccard"))
@@ -467,7 +465,7 @@ class LlmOpsSpec extends SparkTestBase {
     // firstBound 1 and 4 force multiple geometric stages; 256 is the
     // production default; MaxValue-1 degenerates to the unbounded join
     for (fb <- Seq(1L, 4L, 256L, Long.MaxValue - 1)) {
-      val staged = Similarity.stagedAnchors(spark, sf, sigDocs, fb)
+      val staged = Similarity.stagedAnchors(spark, sigDocs, fb)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
       assert(staged == full, s"firstBound=$fb: staged $staged != full $full")
     }
@@ -1189,11 +1187,11 @@ class LlmOpsSpec extends SparkTestBase {
   test("dedup_semantic applies the SemDeDup within-cluster rule exactly; plants are deduped") {
     val out = Dedup.dedupSemantic(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    // mirror the rule exactly from the memoized assignment frame (the same
-    // cells/d2c the operator used): keep i iff no same-cell j earlier in
-    // (d2c desc, vec_id asc) order has cosine(i,j) >= 0.95
-    val assigned = graft.SessionMemo.cache(spark, s"dedup#$sf#semdedup_assign")(
-      fail("assignment frame must be memoized by the query above")).collect()
+    // mirror the rule exactly from the operator's assignment builder (the
+    // same deterministic cells/d2c the operator used): keep i iff no
+    // same-cell j earlier in (d2c desc, vec_id asc) order has
+    // cosine(i,j) >= 0.95
+    val assigned = Dedup.semdedupAssigned(spark, sf).collect()
       .map { r =>
         (r.getLong(r.fieldIndex("vec_id")),
           r.getSeq[Double](r.fieldIndex("v")).toArray,
@@ -1711,5 +1709,17 @@ class LlmOpsSpec extends SparkTestBase {
     val again = TextOps.corpusPackBestfit(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(again.toSeq == rows.toSeq)
+  }
+
+  test("SessionMemo.clear leaves no cached plan behind keys that cache within a call") {
+    val cm = spark.sharedState.cacheManager
+    spark.catalog.clearCache() // frames other specs cached by hand
+    graft.SessionMemo.clear(spark)
+    val keys = Seq("graph_triangle_count", "agg_robust_mad", "dedup_minhash_lsh",
+      "llm_corpus_pipeline_staged")
+    keys.foreach(k => graft.SparkEntry.queries(k)(spark, sf).count(): Unit)
+    assert(!cm.isEmpty, s"$keys cache frames their own calls read twice")
+    graft.SessionMemo.clear(spark)
+    assert(cm.isEmpty, "cached plans survive SessionMemo.clear")
   }
 }

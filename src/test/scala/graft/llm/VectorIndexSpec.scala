@@ -15,7 +15,7 @@ class VectorIndexSpec extends SparkTestBase {
     import graft.etl.Snapshots
     val out = VectorIndex.simIndexIncremental(spark, sf).collect()
     assert(out.nonEmpty)
-    val root = VectorIndex.indexTable(spark, sf)
+    val root = VectorIndex.indexTable(spark, sf, VectorIndex.centsMicro(spark, sf))
 
     // two committed versions: base, then the OCC append
     assert(Snapshots.latestVersion(root) == 2L)
@@ -101,7 +101,8 @@ class VectorIndexSpec extends SparkTestBase {
     // version count
     val contended = Snapshots.readSnapshot(spark, root)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"))).toSet
-    val production = Snapshots.readSnapshot(spark, VectorIndex.indexTable(spark, sf))
+    val production = Snapshots.readSnapshot(spark,
+      VectorIndex.indexTable(spark, sf, VectorIndex.centsMicro(spark, sf)))
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"))).toSet
     assert(contended == production, "forced-conflict table diverged from the uncontended index")
   }
